@@ -7,81 +7,47 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BoundedLevenshtein, DeflateLength, DotProduct, HashedShingles, MinHashSignatures, RepetitionStats, SigAgreement, SimHash60, SortedIntersectCount}
 
 /** Session extensions for the engine's native expressions — wire with
-  * `spark.sql.extensions=graft.GraftExtensions` (or pass to
-  * `SparkSession.builder.withExtensions`) and the functions become first-
+  * `spark.sql.extensions=graft.GraftExtensions` (or pass an instance to
+  * the session builder's `withExtensions`) and the functions become first-
   * class SQL, usable from `spark.sql(...)` alongside the builtins. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.dotFunction)
-    ext.injectFunction(GraftExtensions.minhashFunction)
-    ext.injectFunction(GraftExtensions.simhashFunction)
-    ext.injectFunction(GraftExtensions.repetitionFunction)
-    ext.injectFunction(GraftExtensions.shinglesFunction)
-    ext.injectFunction(GraftExtensions.sigAgreementFunction)
-    ext.injectFunction(GraftExtensions.sortedIntersectFunction)
-    ext.injectFunction(GraftExtensions.deflateFunction)
-    ext.injectFunction(GraftExtensions.levBoundedFunction)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.registrations.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
-  /** `graft_dot(array<double>, array<double>) -> double` ([[DotProduct]]). */
-  val dotFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1)))
+  type Builder = Seq[Expression] => Expression
 
-  /** `graft_minhash_sig(array<long>) -> array<long>` ([[MinHashSignatures]]). */
-  val minhashFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignatures].getName, "graft_minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSignatures(exprs.head))
+  /** (SQL name, expression class, builder) of every native function. A
+    * `k` argument must be a foldable int literal. */
+  private val functions: Seq[(String, Class[_ <: Expression], Builder)] = Seq(
+    // (array<double>, array<double>) -> double
+    ("graft_dot", classOf[DotProduct], e => DotProduct(e.head, e(1))),
+    // array<long> -> array<long>
+    ("graft_minhash_sig", classOf[MinHashSignatures], e => MinHashSignatures(e.head)),
+    // array<string> -> long
+    ("graft_simhash60", classOf[SimHash60], e => SimHash60(e.head)),
+    // array<string> -> struct
+    ("graft_repetition_stats", classOf[RepetitionStats], e => RepetitionStats(e.head)),
+    // (string, k) -> array<long>
+    ("graft_hashed_shingles", classOf[HashedShingles],
+      e => HashedShingles(e.head, e(1).eval().asInstanceOf[Int])),
+    // (array<long>, array<long>) -> int
+    ("graft_sig_agreement", classOf[SigAgreement], e => SigAgreement(e.head, e(1))),
+    // (array<long>, array<long>) -> int; inputs must honor its
+    // sorted-distinct contract
+    ("graft_sorted_intersect_count", classOf[SortedIntersectCount],
+      e => SortedIntersectCount(e.head, e(1))),
+    // string -> long
+    ("graft_deflate_len", classOf[DeflateLength], e => DeflateLength(e.head)),
+    // (string, string, k) -> int
+    ("graft_lev_bounded", classOf[BoundedLevenshtein],
+      e => BoundedLevenshtein(e.head, e(1), e(2).eval().asInstanceOf[Int])))
 
-  /** `graft_simhash60(array<string>) -> long` ([[SimHash60]]). */
-  val simhashFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "graft_simhash60"),
-      (exprs: Seq[Expression]) => SimHash60(exprs.head))
-
-  /** `graft_repetition_stats(array<string>) -> struct` ([[RepetitionStats]]). */
-  val repetitionFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionStats].getName, "graft_repetition_stats"),
-      (exprs: Seq[Expression]) => RepetitionStats(exprs.head))
-
-  /** `graft_sig_agreement(array<long>, array<long>) -> int` ([[SigAgreement]]). */
-  val sigAgreementFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_sig_agreement"),
-      new ExpressionInfo(classOf[SigAgreement].getName, "graft_sig_agreement"),
-      (exprs: Seq[Expression]) => SigAgreement(exprs.head, exprs(1)))
-
-  /** `graft_sorted_intersect_count(array<long>, array<long>) -> int`
-    * ([[SortedIntersectCount]]; inputs must honor its sorted-distinct
-    * contract). */
-  val sortedIntersectFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "graft_sorted_intersect_count"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs.head, exprs(1)))
-
-  /** `graft_deflate_len(string) -> long` ([[DeflateLength]]). */
-  val deflateFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_deflate_len"),
-      new ExpressionInfo(classOf[DeflateLength].getName, "graft_deflate_len"),
-      (exprs: Seq[Expression]) => DeflateLength(exprs.head))
-
-  /** `graft_lev_bounded(string, string, k) -> int` ([[BoundedLevenshtein]];
-    * k must be a foldable int literal). */
-  val levBoundedFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_lev_bounded"),
-      new ExpressionInfo(classOf[BoundedLevenshtein].getName, "graft_lev_bounded"),
-      (exprs: Seq[Expression]) => BoundedLevenshtein(exprs.head, exprs(1),
-        exprs(2).eval().asInstanceOf[Int]))
-
-  /** `graft_hashed_shingles(string, k) -> array<long>` ([[HashedShingles]]).
-    * k must be a foldable int literal. */
-  val shinglesFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_hashed_shingles"),
-      new ExpressionInfo(classOf[HashedShingles].getName, "graft_hashed_shingles"),
-      (exprs: Seq[Expression]) =>
-        HashedShingles(exprs.head, exprs(1).eval().asInstanceOf[Int]))
+  /** The table in the form `injectFunction` and the function registry
+    * take. */
+  val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] =
+    functions.map { case (name, cls, build) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    }
 }

@@ -28,6 +28,12 @@ import graft.streaming.{ResultPublisher, TransitStreamingJob}
   * existing checkpoint WITHOUT it is refused (sources would resume their
   * committed offsets while every counter restarts empty — silently wrong
   * results forever).
+  *
+  * The session is [[graft.engine.Session]]'s, the one the benchmarks
+  * measure. Engine confs come from the deployment: on a real cluster pass
+  * `--conf spark.graft.staging=reliable-checkpoint --conf
+  * spark.graft.staging.dir=hdfs://.../stage` so an executor loss recovers
+  * instead of killing the stream ([[graft.engine.Staging]]).
   */
 object MainApp {
 
@@ -37,8 +43,6 @@ object MainApp {
       checkpoint: String = "/tmp/graft-ckpt",
       stateDir: Option[String] = None,
       publishEverySec: Long = 10L,
-      staging: Option[String] = None,
-      stagingDir: Option[String] = None,
       stateStore: String = "default")
 
   def parse(args: Array[String]): Conf = {
@@ -52,19 +56,12 @@ object MainApp {
       case (c, Array("--checkpoint", v))    => c.copy(checkpoint = v)
       case (c, Array("--state", v))         => c.copy(stateDir = Some(v))
       case (c, Array("--publish-every", v)) => c.copy(publishEverySec = v.toLong)
-      case (c, Array("--staging", v))       => c.copy(staging = Some(v))
-      case (c, Array("--staging-dir", v))   => c.copy(stagingDir = Some(v))
       case (c, Array("--state-store", v))   => c.copy(stateStore = v)
       case (_, other) =>
         throw new IllegalArgumentException(s"unknown arguments: ${other.mkString(" ")}")
     }
     require(conf.publishEverySec > 0,
       s"--publish-every must be positive, got ${conf.publishEverySec}")
-    conf.staging.foreach { p =>
-      require(Set(graft.engine.Staging.LocalCheckpoint,
-        graft.engine.Staging.ReliableCheckpoint, graft.engine.Staging.Persist)(p),
-        s"--staging must be local-checkpoint|reliable-checkpoint|persist, got '$p'")
-    }
     require(Set("default", "rocksdb")(conf.stateStore),
       s"--state-store must be default|rocksdb, got '${conf.stateStore}'")
     conf
@@ -79,12 +76,6 @@ object MainApp {
     * Returns the job, its queries, and the publish step (testable without
     * blocking). */
   def wire(spark: SparkSession, conf: Conf): (TransitStreamingJob, Seq[StreamingQuery], () => Unit) = {
-    // staging policy for the job's per-trigger state materialization
-    // (engine.Staging): on a real cluster pass
-    // `--staging reliable-checkpoint --staging-dir hdfs://.../stage`
-    // so an executor loss recovers instead of killing the stream
-    conf.staging.foreach(spark.conf.set(graft.engine.Staging.PolicyKey, _))
-    conf.stagingDir.foreach(spark.conf.set(graft.engine.Staging.DirKey, _))
     // `--state-store rocksdb`: off-heap keyed state for user/document-
     // cardinality ledgers (streaming.StateStores) — set BEFORE any
     // query starts, kept stable across restarts of one checkpoint
@@ -114,14 +105,7 @@ object MainApp {
 
   def main(args: Array[String]): Unit = {
     val conf = parse(args)
-    val spark = SparkSession.builder()
-      .appName("graft-transit") // master comes from spark-submit / default
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // wide-start AQE sizing unless the deployment set one (engine.Tuning)
-    graft.engine.Tuning.ensureWideStart(spark)
+    val spark = graft.engine.Session.build("graft-transit")
     val (_, queries, publish) = wire(spark, conf)
     val publisher = new Thread(() => {
       try {

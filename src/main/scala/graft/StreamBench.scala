@@ -138,8 +138,8 @@ object StreamBench {
     val in = MemoryStream[(Long, String)]
     var n = 0L
     withCkpt("sb-dedup-") { ckpt =>
-      val q = StreamingDedup.run(in.toDF().toDF("doc_id", "text"), index,
-        ckpt) { (_, verdicts) =>
+      val q = FrozenModelProbe.run(in.toDF().toDF("doc_id", "text"), ckpt)(
+          Dedup.probeIndex(index, _)) { (_, verdicts) =>
         n += verdicts.count()
       }
       val (_, sec) = time {
@@ -175,7 +175,7 @@ object StreamBench {
     (index, probe)
   }
 
-  /** BQ ANN serving probe ([[graft.streaming.StreamingHammingProbe]]): a
+  /** BQ ANN serving probe ([[graft.operators.Similarity.probeHamming]]): a
     * query-vector stream answered per trigger against a prebuilt
     * packed-sign index — the online-serving throughput of the
     * binary-quantization tier. `rows` counts queries SERVED (each
@@ -192,8 +192,8 @@ object StreamBench {
     // query gets exactly TopK rows — a plain count avoids paying an extra
     // distinct shuffle per trigger inside the measured window
     withCkpt("sb-ann-") { ckpt =>
-      val q = StreamingHammingProbe.run(in.toDF().toDF("query_id", "qv", "qn"),
-        index, ckpt) { (_, topk) =>
+      val q = FrozenModelProbe.run(in.toDF().toDF("query_id", "qv", "qn"), ckpt)(
+          graft.operators.Similarity.probeHamming(index, _)) { (_, topk) =>
         n += topk.count() / graft.operators.Similarity.TopK
       }
       val (_, sec) = time {
@@ -287,25 +287,11 @@ object StreamBench {
     val loadAvgStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-streambench")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fresh artifacts root per run unless explicitly shared (see Bench)
-      .config(graft.engine.Artifacts.DirKey,
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACTS_DIR",
-          graft.engine.Artifacts.ephemeralRoot()))
-      .config("spark.ui.enabled", "false")
-    // engine shuffle-sizing defaults (engine.Tuning): streaming plans keep
-    // the static cores-wide state-store layout (AQE does not re-plan
-    // micro-batch shuffles); the wide start applies to the batch fixture
-    // prep only.
-    val spark =
-      graft.engine.Tuning.applyShuffleDefaults(builder, cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // streaming plans keep the static cores-wide state-store layout (AQE
+    // does not re-plan micro-batch shuffles); the wide start applies to the
+    // batch fixture prep only
+    val spark = graft.engine.Session.build("graft-streambench")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val events = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),

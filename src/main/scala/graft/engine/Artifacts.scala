@@ -35,15 +35,14 @@ object Artifacts {
       new java.io.File(sys.props("java.io.tmpdir")).getAbsolutePath)
 
   /** A fresh process-scoped artifacts root, recursively deleted on JVM
-    * exit — what the MEASUREMENT harnesses (Verify / Bench / the test
-    * JVM) default [[DirKey]] to. Durable artifacts are fingerprint-keyed
-    * and reopened across sessions by design ([[durable]]); for a grading
-    * harness that is exactly wrong as a DEFAULT: a gate must measure the
-    * code at HEAD, not reopen an artifact some earlier build wrote into
-    * the shared tmpdir (stale-artifact poisoning when a builder changes
-    * without a [[FormatVersion]] bump). Cross-session reuse is opt-in
-    * for harnesses — `SPARK_GRAFT_ARTIFACTS_DIR` — while the production
-    * runner keeps the durable default. */
+    * exit — what every [[Session]] (and the test JVM) defaults [[DirKey]]
+    * to. Durable artifacts are fingerprint-keyed and reopened across
+    * sessions by design ([[durable]]); as a DEFAULT that is exactly wrong:
+    * a gate must measure the code at HEAD, not reopen an artifact some
+    * earlier build wrote into the shared tmpdir (stale-artifact poisoning
+    * when a builder changes without a [[FormatVersion]] bump).
+    * Cross-session reuse is opt-in: set [[DirKey]] (`--conf`,
+    * `SPARK_GRAFT_CONF`) or `SPARK_GRAFT_ARTIFACTS_DIR`. */
   def ephemeralRoot(): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-artifacts-")
     Runtime.getRuntime.addShutdownHook(new Thread(() => {

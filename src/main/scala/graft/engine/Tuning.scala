@@ -52,56 +52,25 @@ object Tuning {
   /** The engine-default initial shuffle width for a core count. */
   def initialPartitions(cores: Int): Int = math.max(64, cores * InitialFactor)
 
-  /** Apply the engine's shuffle-sizing defaults to a session builder:
-    * static `spark.sql.shuffle.partitions` = cores (the non-AQE floor and
-    * the width of non-coalescible exchanges) and the wide AQE starting
-    * width above. Called BEFORE user-supplied conf overrides
-    * (SPARK_GRAFT_CONF in the entry points), so an explicit
-    * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` or
-    * `spark.sql.shuffle.partitions` setting wins. */
+  val StaticNumKey = "spark.sql.shuffle.partitions"
+
+  val InitialNumKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+  /** The engine's shuffle sizing for a core count: static
+    * `spark.sql.shuffle.partitions` = cores (the non-AQE floor and the
+    * width of non-coalescible exchanges) and the wide AQE starting width
+    * above. [[Session]] applies these under the deployment's own values.
+    *
+    * Dynamic-allocation caveat: the core count is fixed when the session is
+    * built. Under `spark.dynamicAllocation.enabled` a deployment should set
+    * `initialPartitionNum` from the allocation ceiling
+    * (`spark.dynamicAllocation.maxExecutors` × executor cores ×
+    * [[InitialFactor]]); the engine does not guess it. */
+  def shuffleDefaults(cores: Int): Map[String, String] =
+    Map(StaticNumKey -> cores.toString, InitialNumKey -> initialPartitions(cores).toString)
+
+  /** [[shuffleDefaults]] applied to a session builder. */
   def applyShuffleDefaults(builder: SparkSession.Builder,
                            cores: Int): SparkSession.Builder =
-    builder
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialPartitions(cores))
-
-  private val InitialNumKey =
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-
-  private val StaticNumKey = "spark.sql.shuffle.partitions"
-
-  /** Runtime variant for sessions the engine did not build (the
-    * spark-submit production runner): set the wide starting width only
-    * when the deployment has not chosen one — a `--conf` from
-    * spark-submit, spark-defaults, or the builder always wins. A
-    * deployment that explicitly pinned the STATIC width
-    * (`spark.sql.shuffle.partitions` on the deployment channels —
-    * spark-submit `--conf` / spark-defaults / the builder's SparkConf)
-    * also suppresses the wide start: choosing a static width is choosing
-    * a layout, and silently widening the AQE start behind it would
-    * surprise exactly the deployments that tuned it (ADVICE r16). Sized
-    * from `defaultParallelism` (total cluster cores), the same basis the
-    * static `spark.sql.shuffle.partitions` default uses.
-    *
-    * Dynamic-allocation caveat: `defaultParallelism` is sampled when
-    * this runs, and under `spark.dynamicAllocation.enabled` that is the
-    * REGISTERED executor count — at app startup often far below the
-    * cluster's eventual size, pinning the wide start near the 64 floor
-    * for the session's lifetime (ADVICE r16). Deployments using dynamic
-    * allocation should set `initialPartitionNum` explicitly from the
-    * allocation ceiling (`spark.dynamicAllocation.maxExecutors` ×
-    * executor cores × [[InitialFactor]]); this helper intentionally does
-    * not guess it. */
-  def ensureWideStart(spark: SparkSession): Unit =
-    ensureWideStart(spark, spark.sparkContext.getConf.contains(StaticNumKey))
-
-  /** Decision core with the deployment-pinned fact injected — the public
-    * face reads it from the context SparkConf (the deployment channels);
-    * tests drive both branches without needing a second SparkContext. */
-  private[graft] def ensureWideStart(spark: SparkSession,
-                                     deploymentPinnedStatic: Boolean): Unit =
-    if (!deploymentPinnedStatic && spark.conf.getOption(InitialNumKey).isEmpty)
-      spark.conf.set(InitialNumKey,
-        initialPartitions(spark.sparkContext.defaultParallelism).toString)
+    shuffleDefaults(cores).foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
 }

@@ -76,6 +76,12 @@ object GramCounts {
 
   private val Empty = new GenericArrayData(Array.empty[Any])
 
+  /** Initial capacity for a count map over `slots` keys: twice the slots,
+    * at most 2^16. Computed in Long, so a slot count past 2^30 saturates
+    * instead of overflowing to a negative capacity. */
+  private[functions] def capacityHint(slots: Int): Int =
+    math.min(slots.toLong * 2, 1L << 16).toInt
+
   /** Shared by eval and generated code: one byte scan for the space
     * boundaries, one counting pass over the gram slots. Gram strings wrap
     * ranges of this call's own byte copy (`getBytes`), so no per-gram
@@ -97,7 +103,7 @@ object GramCounts {
     starts(nToks) = len + 1
     val slots = nToks - n + 1
     val counts = new java.util.LinkedHashMap[UTF8String, Array[Long]](
-      math.min(slots * 2, 1 << 16))
+      capacityHint(slots))
     var s = 0
     while (s < slots) {
       val from = starts(s)
@@ -155,7 +161,7 @@ object GramCounts {
     ends(nToks - 1) = len
     val slots = nToks - n + 1
     val counts = new java.util.LinkedHashMap[UTF8String, Array[Long]](
-      math.min(slots * 2, 1 << 16))
+      capacityHint(slots))
     var s = 0
     while (s < slots) {
       val from = starts(s)

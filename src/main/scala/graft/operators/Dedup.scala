@@ -740,7 +740,7 @@ object Dedup {
   /** The registered incremental-dedup query: split the documents table by
     * [[IncomingMod]], index the corpus side, probe the incoming side —
     * exactly [[buildIndex]] + [[probeIndex]], which is also the streaming
-    * ingestion path ([[graft.streaming.StreamingDedup]] probes the same
+    * ingestion path ([[graft.streaming.FrozenModelProbe]] probes the same
     * index per micro-batch), so the DuckDB oracle checks both. */
   def minhashLshIncremental(documents: DataFrame): DataFrame = {
     val isIncoming = col("doc_id") % IncomingMod === 0
@@ -752,7 +752,7 @@ object Dedup {
     * banded keys, and the under-cap bucket set — the "100 TB side" of
     * incremental dedup, built ONCE and probed by any number of batch or
     * streaming ingests ([[probeIndex]],
-    * [[graft.streaming.StreamingDedup]]). At scale these three frames are
+    * [[graft.streaming.FrozenModelProbe]]). At scale these three frames are
     * persisted tables bucketed by (band, bkey). */
   final case class MinHashIndex(withSig: DataFrame, bands: DataFrame,
                                 okBuckets: DataFrame)
@@ -1330,7 +1330,7 @@ object Dedup {
     *
     * 100 TB shape: O(batch) gram cells joined on the 8-byte hash against
     * the persisted index, then the per-incoming-doc islands window —
-    * the corpus never rescans ([[graft.streaming.StreamingSpanProbe]]
+    * the corpus never rescans ([[graft.streaming.FrozenModelProbe]]
     * runs the same probe per micro-batch). */
   def probeSpans(index: DataFrame, incoming: DataFrame): DataFrame =
     islandsOf(spanGrams(incoming).join(index, "gh"))

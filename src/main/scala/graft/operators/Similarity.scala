@@ -310,7 +310,7 @@ object Similarity {
   /** The LSH probe core: score a (query_id, qv, qn) batch against a
     * banded (vec_id, v, nrm) corpus — shared verbatim by the registered
     * batch query (where the batch is the first [[NumQueryVectors]]
-    * corpus vectors) and [[graft.streaming.StreamingAnnProbe]] (where it
+    * corpus vectors) and [[graft.streaming.FrozenModelProbe]] (where it
     * is each micro-batch of a query stream). The query side is the small
     * side: its banded signatures broadcast, the corpus never shuffles. */
   def annProbe(corpus: DataFrame, queries: DataFrame): DataFrame = {
@@ -1067,7 +1067,7 @@ object Similarity {
   }
 
   /** Frozen-quantizer assignment probe — the batch core
-    * [[graft.streaming.StreamingKmeansAssign]] shares: every vector of
+    * [[graft.streaming.FrozenModelProbe]] runs per micro-batch: every vector of
     * `batch` (vec_id, v) to its nearest trained centroid, same bit-exact
     * d² argmin as training. (vec_id, cent_id, d2). */
   def kmeansProbe(cents: DataFrame, batch: DataFrame): DataFrame =
@@ -1210,7 +1210,7 @@ object Similarity {
     * store the bounded rerank joins back into. The BQ twin of
     * [[graft.operators.Dedup.MinHashIndex]] — built once, probed by any
     * number of batch or streaming query feeds
-    * ([[graft.streaming.StreamingHammingProbe]]). */
+    * ([[probeHamming]] under [[graft.streaming.FrozenModelProbe]]). */
   final case class BqIndex(packed: DataFrame, vecs: DataFrame)
 
   /** Build a [[BqIndex]] from a (vec_id, v, nrm) frame ([[annCorpus]]
@@ -1291,7 +1291,7 @@ object Similarity {
     * a deployment builds once), the query block probes it, neighbors come
     * only from the corpus. Exactly [[buildBqIndex]] + [[probeHamming]],
     * which is also the streaming ingestion path
-    * ([[graft.streaming.StreamingHammingProbe]] probes the same index per
+    * ([[graft.streaming.FrozenModelProbe]] probes the same index per
     * micro-batch), so the DuckDB oracle checks both. */
   def bqProbe(spark: SparkSession, sfDir: String): DataFrame = {
     val vs = Staging.stage(vectors(spark, sfDir)) // see [[hammingTopK]]
@@ -1787,7 +1787,8 @@ object Similarity {
 
   /** Persist / reload the trained quantizer — the model artifact between
     * [[kmeansCentroids]] (train once, offline) and its consumers
-    * ([[kmeansProbe]], [[graft.streaming.StreamingKmeansAssign]],
+    * ([[kmeansProbe]], also per micro-batch under
+    * [[graft.streaming.FrozenModelProbe]],
     * `ivfTrainedTopK`-style searches): K rows of (cent_id, cv) as plain
     * parquet. Deliberately unpartitioned — the whole model is K×dim
     * values, broadcast-sized by construction at any corpus scale (the

@@ -86,14 +86,9 @@ final class TableStore(spark: SparkSession) {
   * `MemoryStream` in tests, file/Kafka source in production, decoded via
   * [[graft.engine.Decode]] when the wire format is JSON.
   *
-  * Three execution groups (SURVEY.md §7.3 strategy):
+  * Two streaming queries (SURVEY.md §7.3 strategy):
   *
-  *   1. '''Native update-mode aggregations''' (q1, q5, q9): single stateful
-  *      aggregation per query, incremental Spark state store, update-mode
-  *      output upserted into the [[TableStore]]. The scale path: state is
-  *      per-key, shuffle-partitioned, no recompute.
-  *
-  *   2. '''Native watermarked windowed aggregation''' (q11/q12 counts):
+  *   1. '''Native watermarked windowed aggregation''' (q11/q12 counts):
   *      `withWatermark(ts, "0 seconds")` + 1h tumbling window in APPEND mode
   *      reproduces the reference's zero-grace late-data drop
   *      (`TransportTypeMaxPassengersWindow.java:32`,
@@ -102,10 +97,11 @@ final class TableStore(spark: SparkSession) {
   *      for it are dropped by the engine. The append output feeds the
   *      per-window argmax/argmin finishers.
   *
-  *   3. '''foreachBatch over the tagged union stream''' for the
-  *      aggregate⋈aggregate queries (q2, q3, q4, q6, q8, q10, q13), which a
-  *      single Structured Streaming query cannot express (no join of two
-  *      streaming aggregates). The batch handler maintains '''compact
+  *   2. '''foreachBatch over the tagged union stream''' for every other
+  *      query. The aggregate⋈aggregate ones (q2, q3, q4, q6, q8, q10, q13)
+  *      a single Structured Streaming query cannot express (no join of two
+  *      streaming aggregates); the single aggregates (q1, q5, q7, q9) are
+  *      read off the same counters. The batch handler maintains '''compact
   *      incremental counter tables''' — the KTable/RocksDB analog: per-key
   *      aggregates only, never raw events, each bounded by its key
   *      cardinality — and derives the query results '''restricted to the
@@ -131,7 +127,7 @@ final class TableStore(spark: SparkSession) {
   * touched types; q13 over the #operators-sized table).
   *
   * Threading: each foreachBatch body synchronizes on this job — Spark runs
-  * the three queries' triggers on separate threads; state/table mutation is
+  * the two queries' triggers on separate threads; state/table mutation is
   * serialized. Results are eventually consistent across groups within a
   * trigger (the reference has the same property: its 13 topologies share no
   * barrier).
@@ -182,11 +178,11 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
   // (`v<batchId>/{state,results}/<name>` + an atomically-moved `_committed`
   // marker), and a replayed batch (foreachBatch is at-least-once) is
   // detected by id and skipped — effectively-once state. The other
-  // handlers (native-agg upserts, finalized-window upserts) are idempotent
-  // by key, so replaying them against a restored snapshot is safe. At
-  // cluster scale the same protocol targets object storage / Delta; the
-  // snapshots are compact aggregates (bounded by key cardinality), never
-  // raw events — exactly what the reference's changelog topics carry.
+  // handler (finalized-window upserts) is idempotent by key, so replaying
+  // it against a restored snapshot is safe. At cluster scale the same
+  // protocol targets object storage / Delta; the snapshots are compact
+  // aggregates (bounded by key cardinality), never raw events — exactly
+  // what the reference's changelog topics carry.
 
   /** (name, read, write) for every piece of incremental counter state. */
   private def counterSlots: Seq[(String, () => Option[DataFrame], Option[DataFrame] => Unit)] =
@@ -325,7 +321,7 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     all.orderBy(col(metric).desc, col(tiebreak).asc).limit(1)
   }
 
-  // ---- group 3: the tagged-union foreachBatch runner ----------------------
+  // ---- the tagged-union foreachBatch runner -------------------------------
 
   /** Routes and trips as one tagged stream, so a single handler sees both
     * sides of every aggregate⋈aggregate query in the same trigger. */
@@ -386,6 +382,16 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     // -- touched keys: all derivations below are O(batch keys), not O(state)
     val touchedRoutes = r.select("route_id").unionByName(tR.select("route_id"))
       .where(col("route_id").isNotNull).distinct()
+
+    // q1/q5: the per-route capacity fold and trip count, touched routes only
+    store.upsert("q1_seats_per_route",
+      capPerRouteType.get.join(broadcast(touchedRoutes), Seq("route_id"))
+        .groupBy("route_id").agg(sum("cap").as("total_capacity")),
+      Seq("route_id"))
+    store.upsert("q5_passengers_per_route",
+      cntPerRoute.get.join(broadcast(touchedRoutes), Seq("route_id"))
+        .select(col("route_id"), col("cnt").as("passenger_count")),
+      Seq("route_id"))
 
     // q4: occupancy for touched routes only, upserted on (route_id,
     // transport_type) — the batch routeOccupancy grain (ADVICE r2: a route
@@ -475,7 +481,7 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     commitState()
   }
 
-  // ---- group 2: watermarked windowed counts (q11/q12) ---------------------
+  // ---- watermarked windowed counts (q11/q12) ------------------------------
 
   /** Append-mode finalized (window, type) counts: each row arrives exactly
     * once, when the 0-second watermark passes the window end.
@@ -534,31 +540,8 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     commitState()
   }
 
-  // ---- group 1: native update-mode single aggregations --------------------
-
-  private def nativeAggs: Seq[(String, DataFrame, Seq[String])] = Seq(
-    ("q1_seats_per_route",
-      routes.filter(col("route_id").isNotNull)
-        .groupBy("route_id").agg(sum("capacity").as("total_capacity")),
-      Seq("route_id")),
-    ("q5_passengers_per_route",
-      trips.filter(col("route_id").isNotNull)
-        .groupBy("route_id").agg(count(lit(1)).as("passenger_count")),
-      Seq("route_id")),
-  )
-
-  // -------------------------------------------------------------------------
-
   /** Start every streaming query; caller owns awaiting/stopping them. */
   def startAll(checkpointRoot: String): Seq[StreamingQuery] = {
-    val native = nativeAggs.map { case (name, df, keys) =>
-      df.writeStream.outputMode("update")
-        .option("checkpointLocation", s"$checkpointRoot/$name")
-        .queryName(name)
-        .foreachBatch((b: DataFrame, _: Long) =>
-          synchronized { store.upsert(name, b, keys); commitState() })
-        .start()
-    }
     val windowed = windowedCounts.writeStream.outputMode("append")
       .option("checkpointLocation", s"$checkpointRoot/windowed")
       .queryName("windowed_counts")
@@ -576,6 +559,6 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
       .queryName("union_runner")
       .foreachBatch(processUnionBatch _)
       .start()
-    native :+ windowed :+ union
+    Seq(windowed, union)
   }
 }

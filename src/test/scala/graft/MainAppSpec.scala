@@ -13,13 +13,14 @@ class MainAppSpec extends SparkSpec {
   test("parse: full flag set and rejection of malformed command lines") {
     val c = MainApp.parse(Array("--topics", "/t", "--bootstrap", "b:9092",
       "--checkpoint", "/c", "--state", "/s", "--publish-every", "5",
-      "--staging", "reliable-checkpoint", "--staging-dir", "/stg",
       "--state-store", "rocksdb"))
-    c shouldBe MainApp.Conf(Some("/t"), "b:9092", "/c", Some("/s"), 5L,
-      Some("reliable-checkpoint"), Some("/stg"), "rocksdb")
+    c shouldBe MainApp.Conf(Some("/t"), "b:9092", "/c", Some("/s"), 5L, "rocksdb")
     intercept[IllegalArgumentException](MainApp.parse(Array("--bogus", "x")))
+    // staging is a deployment conf (spark.graft.staging[.dir]), not a flag
     intercept[IllegalArgumentException](
-      MainApp.parse(Array("--staging", "ramdisk"))) // unknown policy
+      MainApp.parse(Array("--staging", "persist")))
+    intercept[IllegalArgumentException](
+      MainApp.parse(Array("--staging-dir", "/stg")))
     intercept[IllegalArgumentException](
       MainApp.parse(Array("--state-store", "leveldb"))) // unknown provider
     // a flag missing its value must not swallow the next flag

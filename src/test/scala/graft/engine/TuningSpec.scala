@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Pins the wide-start shuffle-sizing default (engine.Tuning, VERDICT r15
-  * #1): the conf plumbing, the override contract, and the semantic
-  * invariant that the starting width is a pure cost knob — results are
+  * #1): the width formula (the override contract is SessionSpec's) and the
+  * semantic invariant that the starting width is a pure cost knob — results are
   * bit-identical whatever the initial partition count, because AQE's
   * size-based coalesce only changes the exchange LAYOUT. The measured
   * payoff lives in SCALE_SWEEP §round-16 (sf10 five-query A/B: 530 s at
@@ -18,35 +18,6 @@ class TuningSpec extends SparkSpec {
     Tuning.initialPartitions(8) shouldBe 64
     Tuning.initialPartitions(4) shouldBe 64 // floor: small test topologies
     Tuning.initialPartitions(128) shouldBe 1024
-  }
-
-  test("ensureWideStart sets the AQE initial width only when unset, and " +
-    "defers to a deployment-pinned static width (ADVICE r16)") {
-    val prior = spark.conf.getOption(Key)
-    try {
-      spark.conf.unset(Key)
-      // deployment pinned spark.sql.shuffle.partitions → choosing a static
-      // width is choosing a layout; the wide start must not widen behind it
-      Tuning.ensureWideStart(spark, deploymentPinnedStatic = true)
-      spark.conf.getOption(Key) shouldBe None
-      Tuning.ensureWideStart(spark, deploymentPinnedStatic = false)
-      spark.conf.get(Key) shouldBe
-        Tuning.initialPartitions(spark.sparkContext.defaultParallelism).toString
-      // an explicit deployment setting always wins
-      spark.conf.set(Key, "7")
-      Tuning.ensureWideStart(spark, deploymentPinnedStatic = false)
-      spark.conf.get(Key) shouldBe "7"
-      // the public face reads the pin from the context SparkConf — this
-      // test session's builder set shuffle.partitions, so it must no-op
-      spark.conf.unset(Key)
-      Tuning.ensureWideStart(spark)
-      spark.conf.getOption(Key) shouldBe None
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(Key, v)
-        case None    => spark.conf.unset(Key)
-      }
-    }
   }
 
   test("wide start is a pure cost knob: identical results at 4 vs 512") {

@@ -54,7 +54,8 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("registers as a SQL function through the session extension builder") {
-    val (ident, info, builder) = graft.GraftExtensions.dotFunction
+    val (ident, info, builder) =
+      graft.GraftExtensions.registrations.find(_._1.funcName == "graft_dot").get
     spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
     val v = spark.sql(
       "SELECT graft_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d")

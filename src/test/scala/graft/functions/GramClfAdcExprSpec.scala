@@ -253,4 +253,15 @@ class GramClfAdcExprSpec extends SparkSpec {
         java.lang.Double.doubleToLongBits(r.getDouble(1))
     }
   }
+
+  test("count-map capacity hint saturates instead of overflowing past 2^30 slots") {
+    GramCounts.capacityHint(0) shouldBe 0
+    GramCounts.capacityHint(1000) shouldBe 2000
+    GramCounts.capacityHint(1 << 15) shouldBe (1 << 16)
+    GramCounts.capacityHint(1 << 30) shouldBe (1 << 16) // Int arithmetic: -2^31
+    GramCounts.capacityHint(Int.MaxValue) shouldBe (1 << 16) // Int arithmetic: -2
+    // the hint is a valid map capacity at every slot count
+    new java.util.LinkedHashMap[String, Long](GramCounts.capacityHint(Int.MaxValue))
+      .isEmpty shouldBe true
+  }
 }

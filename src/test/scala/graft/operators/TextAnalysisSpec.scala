@@ -559,7 +559,8 @@ class TextAnalysisSpec extends SparkSpec {
     // directly here since the shared test session predates the function
     // (the SketchesSpec convention — Verify/Bench sessions get it via
     // spark.sql.extensions=graft.GraftExtensions)
-    val (_, _, builder) = graft.GraftExtensions.deflateFunction
+    val (_, _, builder) =
+      graft.GraftExtensions.registrations.find(_._1.funcName == "graft_deflate_len").get
     sp.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_deflate_len", builder, "scala_udf")
     val n = sp.sql(
